@@ -63,8 +63,9 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 # analyzed-DataFrame cache: repeated load_table calls (50 registry
 # queries x 1-3 tables each) would re-list files and re-read parquet
 # footers every time; the logical plan is immutable, so reuse it.
-# Keyed by application id — a new session gets fresh plans.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Keyed by (application id, sf_dir, table, scan floor) — a new session
+# gets fresh plans.
+_TABLE_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
 
 
 def load_table(

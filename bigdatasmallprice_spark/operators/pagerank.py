@@ -25,15 +25,17 @@ teleport term (1-d) * SCALE with d = 0.85 — exact because 15 * 1e6 is
 divisible by 100. Zero float ops anywhere, so the oracle's unrolled
 CTE chain replays the fit bit-identically on any engine build.
 
-Scale shape: edges come from one distinct-project + one order-keyed
-self-join (per-order supplier sets are small, so the join output is
-sum of per-order squares — the SemDeDup bound); each iteration is ONE
-join + ONE groupBy shuffle over the edge list plus a scalar dangling
-aggregate, the canonical distributed-PR plan that holds at 100 TB.
-Rank frames are localCheckpoint'ed per iteration to cut the 12-deep
-lineage. Overflow: r_a * w_ab <= (n * 1e6) * max_w — fine through
-sf1-scale corpora by orders of magnitude; at extreme graph sizes
-rescale ranks to a coarser unit (documented spec change).
+Scale shape: edges come from one per-order supplier-set groupBy whose
+pairs explode map-side (output bounded by the sum of per-order squares
+— the SemDeDup bound). The fit is Pregel-style: each node's state row
+carries its adjacency list, so an iteration is ONE explode (the row
+itself plus one message per out-edge) and ONE groupBy shuffle — no
+per-round join, broadcast or driver action. The rounds stay one lazy
+plan that grows linearly and is cut once at the end; only a graph with
+dangling nodes cuts per round, to read its dangling-mass scalar.
+Overflow: r_a * w_ab <= (n * 1e6) * max_w — fine through sf1-scale
+corpora by orders of magnitude; at extreme graph sizes rescale ranks
+to a coarser unit (documented spec change).
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdatasmallprice_spark.caching import cut_lineage
 from bigdatasmallprice_spark.operators.distill import (
     DUCK_DIV,
     SPARK_DIV,
@@ -83,65 +86,69 @@ def pagerank_fit(
     nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS
 ) -> DataFrame:
     """Integer PR over (node) x (src, dst, w): returns (node, r) after
-    ``iters`` damped iterations. One join + one groupBy per iteration;
-    the dangling mass is the only driver-side scalar."""
+    ``iters`` damped iterations. ``nodes`` holds distinct keys.
+
+    Pregel-style: the state row (node, out, wout, r) carries the node's
+    adjacency, so a round is one explode of each row into itself
+    (c = 0) plus one message per out-edge, and one groupBy("node") that
+    sums the messages and re-collects the adjacency. Messages to keys
+    outside ``nodes`` (no own row) are dropped; their weight still
+    counts in the sender's ``wout``. The dangling mass is the only
+    driver-side scalar, and only when dangling nodes exist."""
     op = SPARK_DIV
-    outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
-    e = edges.join(outw, "src").persist()
-    dang = nodes.join(
-        outw.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-    n = nodes.count()
+    adj = edges.groupBy(F.col("src").alias("node")).agg(
+        F.collect_list(F.struct("dst", "w")).alias("out"),
+        F.sum("w").cast("long").alias("wout"),
+    )
+    # dangling nodes get out = [] and wout = 0: a non-null wout marks
+    # an own row through the round's groupBy
+    no_out = F.expr("array()").cast(adj.schema["out"].dataType)
+    state = nodes.join(adj, "node", "left").select(
+        "node",
+        F.coalesce("out", no_out).alias("out"),
+        F.coalesce("wout", F.lit(0).cast("long")).alias("wout"),
+        F.lit(PR_SCALE).cast("long").alias("r"),
+    )
+    n, n_dang = state.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("wout") == 0, 1))
+    ).first()
     if n == 0:
         # degenerate input: no nodes means no mass to distribute; the
         # per-iteration pdiv by n would raise, so return the (empty)
         # ranks frame instead of tripping ZeroDivisionError
-        e.unpersist()
-        dang.unpersist()
         return nodes.select("node", F.lit(PR_SCALE).cast("long").alias("r"))
-    # the dangling SET is static across iterations; when it is empty
-    # (every node has out-edges — the common co-occurrence-graph case)
-    # the per-iteration dangling aggregate is a constant 0 and its 12
-    # scalar jobs are skipped entirely
-    has_dangling = dang.limit(1).count() > 0
-    # lineage cadence: a checkpoint every iteration spends a
-    # materialization job per round; every 3 rounds halves the wall
-    # (12.8s -> 8.0s at sf0.1, identical results — measured). With
-    # dangling nodes the per-round scalar collect would recompute the
-    # unchecked chain, so the cadence drops back to 1.
-    ckpt_every = 1 if has_dangling else 3
-    ranks = nodes.select(
-        "node", F.lit(PR_SCALE).cast("long").alias("r")
-    ).localCheckpoint(eager=True)
+    share = pdiv("r * e.w", "wout", op)
+    rows = F.expr(
+        "inline(concat(array(struct(node, CAST(0 AS BIGINT) AS c, out, wout)), "
+        "transform(out, e -> struct(e.dst AS node, "
+        f"CAST({share} AS BIGINT) AS c, NULL AS out, NULL AS wout))))"
+    )
+    dmass = n_dang * PR_SCALE
     for it in range(1, iters + 1):
-        dmass = (
-            (dang.join(ranks, "node").agg(F.sum("r")).collect()[0][0] or 0)
-            if has_dangling
-            else 0
-        )
-        dshare = pdiv_py(int(dmass), n)
-        inc = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                "dst",
-                F.expr(f"CAST({pdiv('r * w', 'wout', op)} AS BIGINT)").alias("c"),
+        upd = pdiv(f"{PR_DAMP_NUM} * (sum(c) + {pdiv_py(dmass, n)})", "100", op)
+        # a key outside ``nodes`` has no own row, so it leaves the round
+        # with out = NULL and wout = NULL; concat(..., NULL) is NULL, so
+        # the next round's inline emits nothing for it
+        state = (
+            state.select(rows)
+            .groupBy("node")
+            .agg(
+                F.expr("get(collect_list(out), 0)").alias("out"),
+                F.max("wout").alias("wout"),
+                F.expr(f"CAST({PR_TELEPORT} + {upd} AS BIGINT)").alias("r"),
             )
-            .groupBy("dst")
-            .agg(F.sum("c").cast("long").alias("inr"))
         )
-        upd = pdiv(
-            f"{PR_DAMP_NUM} * (coalesce(inr, CAST(0 AS BIGINT)) + {dshare})",
-            "100",
-            op,
-        )
-        ranks = nodes.join(inc.withColumnRenamed("dst", "node"), "node", "left").selectExpr(
-            "node", f"CAST({PR_TELEPORT} + {upd} AS BIGINT) AS r"
-        )
-        if it % ckpt_every == 0 or it == iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    e.unpersist()
-    dang.unpersist()
-    return ranks
+        if n_dang and it < iters:
+            # the next round's dangling share is a driver scalar: cut
+            # here so its aggregate reads this round's ranks, not the
+            # chain of every round before it
+            state = cut_lineage(state)
+            dmass = state.filter("wout = 0").agg(F.sum("r")).first()[0]
+    # the rounds above are one lazy plan, one shuffle each, and one cut
+    # materializes them all; the cast undoes any widening of the key by
+    # the round's struct, so ``node`` keeps the type ``nodes`` gave it
+    node = F.col("node").cast(nodes.schema["node"].dataType).alias("node")
+    return cut_lineage(state.filter("wout IS NOT NULL").select(node, "r"))
 
 
 PPR_MASS = 1_000_000_000  # per-seed walk mass (nano-units of 1.0)

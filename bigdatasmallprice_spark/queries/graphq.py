@@ -45,10 +45,12 @@ FROM r{PR_ITERS} r LEFT JOIN ow ON ow.src = r.node
     "with explicitly-rounded integer divisions (the all-integer house "
     "discipline of the distillation fit / kmeans / GBT), so the "
     "oracle's unrolled CTE chain replays the fit bit-identically on "
-    "any engine build. Per iteration: ONE edge join + ONE groupBy "
-    "shuffle plus a scalar dangling aggregate — the canonical "
-    "distributed-PR plan, unchanged at 100 TB; rank frames are "
-    "localCheckpoint'ed to cut the 12-deep lineage. Output: every "
+    "any engine build. Pregel-style rounds: each supplier's state row "
+    "carries its adjacency list, so an iteration is ONE explode (the "
+    "row plus one message per out-edge) and ONE groupBy shuffle — no "
+    "per-round join, broadcast or driver action; the 12 rounds stay "
+    "one lazy plan, cut once at the end (a graph with dangling nodes "
+    "cuts per round to read its dangling-mass scalar). Output: every "
     "supplier's final rank, out-weight, and total-ordered position.",
     tags=("graph", "train", "join"),
 )
@@ -64,9 +66,9 @@ def pagerank_copurchase_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = table(spark, sf_dir, "supplier")
     nodes = sup.select(F.col("s_suppkey").alias("node"))
     # persist: the edge pipeline (groupBy + pair explode + count over
-    # lineitem) feeds the fit's dangling probe, its per-iteration join
-    # frame AND the final w_out join — without the cache it would run
-    # three times (caller releases via released_caches)
+    # lineitem) feeds the fit's set-up count, its adjacency state AND
+    # the final w_out join — without the cache it would run three
+    # times (caller releases via released_caches)
     edges = copurchase_edges(li).persist()
     outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
     ranks = pagerank_fit(nodes, edges)

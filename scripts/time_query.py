@@ -5,6 +5,10 @@ the full 174-query sweep. Usage:
     python scripts/time_query.py name1 name2 ...          # time queries
     python scripts/time_query.py --explain name           # plan to stdout
 
+Each timed run is its own Spark job group; the TIMED line gives the
+job count of the fastest run next to its wall time. The last line is
+the JSON of {name: seconds}.
+
 Honors $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS like bench.py.
 """
 
@@ -42,20 +46,25 @@ def main() -> None:
             continue
         from bigdatasmallprice_spark.caching import released_caches
 
-        spark.sparkContext.setJobDescription(f"warmup: {name}")
+        sc = spark.sparkContext
+        sc.setJobGroup(f"warmup:{name}", f"warmup: {name}")
         with released_caches(spark):
             spec.fn(spark, sf_dir).collect()
         spark.catalog.clearCache()
-        wall = float("inf")
+        wall, jobs = float("inf"), 0
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"timed{i}: {name}")
+            group = f"timed{i}:{name}"
+            sc.setJobGroup(group, f"timed{i}: {name}")
             with released_caches(spark):
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).collect()
-                wall = min(wall, time.perf_counter() - t0)
+                dt = time.perf_counter() - t0
+            if dt < wall:
+                wall = dt
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             spark.catalog.clearCache()
         out[name] = round(wall, 3)
-        print(f"TIMED {name}: {out[name]}s", flush=True)
+        print(f"TIMED {name}: {out[name]}s ({jobs} jobs)", flush=True)
     print(json.dumps(out))
     spark.stop()
 

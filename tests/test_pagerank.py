@@ -59,6 +59,57 @@ def test_dangling_mass_is_redistributed_exactly(spark):
     assert abs(sum(got.values()) - 3 * PR_SCALE) <= 3 * iters  # rounding only
 
 
+def test_stray_edge_endpoints_and_dangling_node_replay_exactly(spark):
+    """Edges may name keys outside ``nodes``: a message to a non-node
+    is dropped but its weight still counts in the sender's out-weight,
+    and an edge FROM a non-node sends nothing. Node 3 is dangling.
+    Replayed here with the same integer ops."""
+    nodes = _nodes(spark, [0, 1, 2, 3])
+    edges = _edges(
+        spark,
+        [
+            (0, 1, 2), (0, 9, 1),  # 9 is not a node: dropped, still in W_0
+            (1, 0, 1), (1, 3, 2),
+            (2, 1, 1),
+            (7, 2, 5),             # 7 is not a node: sends nothing
+        ],
+    )
+    iters = 5
+    got = {r.node: r.r for r in pagerank_fit(nodes, edges, iters=iters).collect()}
+
+    live = [(0, 1, 2), (1, 0, 1), (1, 3, 2), (2, 1, 1)]
+    wout = {0: 3, 1: 3, 2: 1}
+    r = {v: PR_SCALE for v in range(4)}
+    for _ in range(iters):
+        dshare = pdiv_py(r[3], 4)
+        inr = {v: 0 for v in r}
+        for a, b, w in live:
+            inr[b] += pdiv_py(r[a] * w, wout[a])
+        r = {
+            v: PR_TELEPORT + pdiv_py(PR_DAMP_NUM * (inr[v] + dshare), 100)
+            for v in r
+        }
+    assert got == r, (got, r)
+
+
+def test_one_spark_job_per_round(spark):
+    """Without dangling nodes the rounds stay one lazy plan with one
+    shuffle each: four extra rounds cost at most four extra jobs."""
+    sc = spark.sparkContext
+    nodes = _nodes(spark, [0, 1, 2, 3])
+    edges = _edges(spark, [(0, 1, 1), (1, 2, 2), (2, 3, 1), (3, 0, 3), (0, 2, 1)])
+    jobs = {}
+    try:
+        for iters in (4, 8):
+            group = f"test_pagerank_rounds_{iters}"
+            sc.setJobGroup(group, "pagerank_fit job count")
+            pagerank_fit(nodes, edges, iters=iters).collect()
+            jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[8] - jobs[4] <= 4, jobs
+
+
 def test_star_graph_hub_ranks_highest(spark):
     """Hub 0 with spokes 1..6 pointing in (and hub pointing back):
     the hub must hold the strictly largest rank."""
